@@ -4,8 +4,8 @@ Mirrors the reference's build lifecycle (SURVEY.md §3.3) Spark-first:
 
   reference                                  here
   ---------------------------------------   ----------------------------------
-  IndexWriter N threads -> N segments        N doc-range segments, each a Spark
-  (native/src/index.rs:177)                  job writing independent Parquet
+  IndexWriter N threads -> N segments        N doc-range segments written by
+  (native/src/index.rs:177)                  one set of Spark jobs (one per table)
   writer.commit() -> opstamp                 manifest "add" line per segment
   QuickwitSplit.convertIndex + mergeSplits   merge job: re-block postings per
   (native/src/quickwit_split/merge_impl.rs)  (field,term,shard), global stats
@@ -38,13 +38,17 @@ Scale notes (the design target is ~10^12 files on a multi-executor cluster):
   ("import", "return") split across shards, every groupBy key is bounded by
   the shard width -> no hot reducer; shards are doc-ordered so merged posting
   lists are concatenations, never re-sorts.
-- segments are doc-range slices committed independently -> an interrupted
-  build resumes from the manifest without recomputing finished segments.
+- segments are doc-range slices, each recorded by its own manifest "add";
+  an interrupted build resumes from the manifest without recomputing the
+  segments whose add landed.  One writer (_build_segments_batched) writes
+  every segment, for batch builds and streaming appends alike.
 - the only shuffles are (a) ONE repartition by (_seg,field,term,shard)
-  across all segments of a batch build and (b) the same key at merge; both
+  across all segments of a build and (b) the same key at merge; both
   scale horizontally with executors.
-- tokenization defaults to the pure-Catalyst expression (whole-stage codegen,
-  zero Python); the pandas-UDF path is kept for golden parity tests.
+- posting tokenization is one narrow mapInArrow pass per text field (an
+  Arrow/RE2 kernel for pure-ASCII batches, a pandas regex kernel
+  otherwise); docs-table token lengths and fieldnorm ids are JVM
+  expressions.
 """
 
 from __future__ import annotations
@@ -137,19 +141,12 @@ def _zip_index_ids(df: DataFrame):
     return df.mapInPandas(add_ids, schema), acc
 
 
-def _norm_id_udf():
-    @F.pandas_udf(T.IntegerType())
-    def _norm(lengths: pd.Series) -> pd.Series:
-        return pd.Series(fieldnorm_to_id(lengths.fillna(0).to_numpy()).astype(np.int32))
-    return _norm
-
-
 def _norm_id_expr(len_col):
     """Pure-JVM fieldnorm quantization: the 256-entry table is strictly
     increasing, so id == count(entries <= len) - 1 (len >= 0 always holds
-    for token counts).  Bit-identical to fieldnorm_to_id / the pandas UDF
-    (pinned by tests); removes the ArrowEvalPython stage from the docs
-    frame of every build (guide SS4.1: built-ins over UDFs)."""
+    for token counts).  Bit-identical to fieldnorm_to_id, null -> 0
+    (pinned by tests/test_fieldnorm.py); keeps the docs frame of every
+    build free of Python stages."""
     from tantivy4java_spark.fieldnorm import FIELDNORM_TABLE
     arr = F.lit([int(v) for v in FIELDNORM_TABLE])
     ln = F.coalesce(len_col, F.lit(0))
@@ -562,18 +559,13 @@ class BuildStats:
 class IndexBuilder:
     def __init__(self, spark: SparkSession, config: IndexConfig, index_dir: str,
                  use_sql_tokenizer: bool = True, num_segments: int = 1,
-                 shuffle_partitions: Optional[int] = None,
-                 segment_concurrency: int = 2):
+                 shuffle_partitions: Optional[int] = None):
         self.spark = spark
         self.config = config
         self.index_dir = index_dir.rstrip("/")
         self.use_sql_tokenizer = use_sql_tokenizer
         self.num_segments = num_segments
         self.shuffle_partitions = shuffle_partitions
-        # segments are independent jobs; submitting a few concurrently keeps
-        # the cluster saturated through each job's serial tail (driver-side
-        # threads — Spark's scheduler interleaves the stages)
-        self.segment_concurrency = max(1, segment_concurrency)
 
     # -- paths ------------------------------------------------------------
     # All metadata I/O goes through fsio so the index root can be any
@@ -757,52 +749,6 @@ class IndexBuilder:
             return df.repartition(self.shuffle_partitions, *cols)
         return df.repartition(*cols)
 
-    def _segment_write_jobs(self, docs: DataFrame, per_doc_term: DataFrame,
-                            seg_dir: str) -> list:
-        """Mutually independent write closures for ONE segment (inputs must
-        already be cached): postings, termstats, docs, positions."""
-        cfg = self.config
-        pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
-
-        def _write_positions():
-            # positions table (position-indexed fields only; delta-varint
-            # binary; includes json fields — per-dot-path positions for
-            # phrase-over-path)
-            (self._key_repartition(
-                per_doc_term
-                .filter(F.col("field").isin(pos_fields))
-                .select("field", "term", "doc_id", "norm_id", "pos_bin"),
-                "field", "term")
-             .sortWithinPartitions("field", "term", "doc_id")
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "positions")))
-
-        def _write_postings():
-            # block-encoded postings (skew-proof: keyed by (field,term,shard))
-            enc = _encode_blocks_fn(cfg.block_size, with_scores=False)
-            (self._key_repartition(
-                per_doc_term
-                .select("field", "term", "shard", "doc_id", "tf",
-                        F.col("norm_id").cast("long").alias("norm_id")),
-                "field", "term", "shard")
-             .sortWithinPartitions("field", "term", "shard", "doc_id")
-             .mapInPandas(enc, _POSTINGS_SCHEMA)
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "postings")))
-
-        def _write_termstats():
-            # per-segment term stats (for global df at merge)
-            (per_doc_term.groupBy("field", "term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                  F.sum("tf").cast("long").alias("total_tf"))
-             .write.mode("overwrite").parquet(os.path.join(seg_dir, "termstats")))
-
-        def _write_docs():
-            docs.write.mode("overwrite").parquet(os.path.join(seg_dir, "docs"))
-
-        jobs = [_write_postings, _write_termstats, _write_docs]
-        if pos_fields:
-            jobs.append(_write_positions)
-        return jobs
-
     def _stat_exprs(self) -> list:
         return ([F.count(F.lit(1)).alias("_n"),
                  F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi")]
@@ -826,189 +772,143 @@ class IndexBuilder:
             "wall_sec": round(time.time() - t0, 3),
         }
 
-    def _build_segment(self, seg_df: DataFrame, seg_id: int) -> dict:
-        """Single-segment build (streaming appends, kill-test mode, and the
-        one-segment fallback).  Multi-segment batch builds go through
-        build()'s batched path, which shares ONE tokenize pass + ONE stats
-        job across all pending segments."""
-        t0 = time.time()
-        seg_dir = self._p("segments", f"seg={seg_id:05d}")
-        docs = self._docs_frame(seg_df).persist()
-        per_doc_term = self._pdt_frame(seg_df).persist()
-
-        # The write jobs are mutually independent once per_doc_term / docs
-        # are cached, so they run CONCURRENTLY and the segment tail is the
-        # slowest job (the postings encode), not the sum.  The caches are
-        # materialized FIRST by dedicated jobs: letting the writers race
-        # to build them measured 46% slower at 8 cores (200k docs, 101.6 s
-        # vs 69.4 s serial) because concurrent first-use serializes on the
-        # block manager's per-partition load locks while the blocked tasks
-        # hold task slots — the expensive tokenize pass must run once at
-        # full cluster width before any fan-out.
-        srow = docs.agg(*self._stat_exprs()).collect()[0]
-        per_doc_term.count()
-
-        from concurrent.futures import ThreadPoolExecutor
-        jobs = self._segment_write_jobs(docs, per_doc_term, seg_dir)
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            futs = [ex.submit(j) for j in jobs]
-            for f in futs:
-                f.result()
-        per_doc_term.unpersist()
-        docs.unpersist()
-        return self._action_from_stats(seg_id, srow, t0)
-
     def _build_segments_batched(self, with_ids: DataFrame,
-                                pending: List[int], nseg: int,
-                                seg_width: Optional[int], lock) -> None:
-        """Build all pending segments from ONE shared tokenize pass.
+                                seg_ids: List[int], seg_col) -> List[dict]:
+        """Write the tables of segments ``seg_ids`` from ONE shared tokenize
+        pass; return their manifest "add" actions in ``seg_ids`` order.
 
-        The former per-segment loop ran, per segment, a stats-agg job, a
-        cache-materialize count, and 4 write jobs — at 4 segments that is
-        ~24 driver-planned jobs in 2 concurrency waves, and at bench scale
-        the fixed per-job cost (planning + codegen + scheduling) dominated
-        the actual work (guide §1.2 step 1).  Here the docs/per-doc-term
-        frames are computed ONCE over all pending segments with a derived
-        ``_seg`` column (a doc-range function of doc_id — no join), cached,
-        per-segment stats collapse into ONE groupBy("_seg") job, and every
-        segment's write jobs are submitted concurrently so the tail is the
-        slowest single write, not waves of them.  On-disk layout, manifest
-        actions and resume semantics are unchanged (each segment still gets
-        its own directories and its own manifest "add")."""
+        This is the only segment writer.  ``build()`` passes the doc-range
+        expression ``doc_id div seg_width`` (or ``lit(0)``) and
+        ``streaming.append_segment`` passes ``lit(seg_id)``; ``with_ids``
+        must hold only rows of ``seg_ids``.  The docs/per-doc-term frames are
+        computed ONCE over all segments with a ``_seg`` column and cached,
+        per-segment stats collapse into ONE groupBy("_seg") job, and ONE
+        write job per output table covers every segment (partitioned by
+        ``_seg``, then renamed into segments/seg=NNNNN/<table>), so the
+        fixed per-job cost does not grow with the segment count (guide §1.2
+        step 1).  A segment or table with no rows gets a schema-bearing
+        empty Parquet table, which merge can read.  Nothing is written to
+        the manifest here: the caller appends the returned actions, so the
+        adds of one call land only after all of that call's write jobs
+        finish, and a crash before then re-writes every segment of the call
+        on resume."""
+        from concurrent.futures import ThreadPoolExecutor
         t0 = time.time()
-        src = with_ids
-        if seg_width is not None and len(pending) < nseg:
-            src = with_ids.filter(
-                F.expr(f"doc_id div {seg_width}").isin(pending))
-        seg_col = (F.expr(f"doc_id div {seg_width}") if seg_width is not None
-                   else F.lit(0).cast("long"))
         cfg = self.config
         dp = self.spark.sparkContext.defaultParallelism
-        gd = self._docs_frame(src).withColumn("_seg", seg_col).persist()
+        gd = self._docs_frame(with_ids).withColumn("_seg", seg_col)
         # the pdt frame is a 5-way union -> 5 x dp partitions; every write
         # job rescans the whole cache, so cache at cluster width (coalesce
         # is narrow: one task computes the tokenize branch partition plus
         # its 4 cheap sibling branches) — 3 write jobs x 160 cache-scan
         # tasks was the measured write-phase bottleneck
-        gpdt = (self._pdt_frame(src).withColumn("_seg", seg_col)
-                .coalesce(dp).persist())
-        # materialize the shared caches at full cluster width, one job each
-        # (see _build_segment for why the writers must not race to build
-        # them); the stats agg doubles as the docs-cache builder
-        dbg = os.environ.get("SPARK_GRAFT_BUILD_DEBUG") == "1"
+        gpdt = (self._pdt_frame(with_ids).withColumn("_seg", seg_col)
+                .coalesce(dp))
+        # per call: appends with distinct segment ids never share a temp dir
+        tmp = self._p("segments", f"_batch_tmp{seg_ids[0]}")
+        # persist only once both frames are planned: a planning error (e.g.
+        # an unknown tokenizer) then leaves no cache behind
+        gd.persist()
+        gpdt.persist()
+        try:
+            # Materialize both caches at full cluster width, one job each,
+            # BEFORE the writers fan out: letting the writers race to build
+            # the tokenize cache measured 46% slower at 8 cores (200k docs)
+            # because concurrent first-use serializes on the block
+            # manager's per-partition load locks while the blocked tasks
+            # hold task slots.  The two jobs themselves are independent
+            # (both read the cheap with_ids cache); the stats agg doubles
+            # as the docs-cache builder.
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_stats = ex.submit(
+                    lambda: gd.groupBy("_seg").agg(*self._stat_exprs())
+                    .collect())
+                f_cnt = ex.submit(gpdt.count)
+                stat_rows = f_stats.result()
+                f_cnt.result()
+            stats_by_seg = {int(r["_seg"]): r for r in stat_rows}
 
-        def _tlog(label, t_from):
-            if dbg:
-                import sys
-                print(f"[build-batched] {label}: "
-                      f"{time.time() - t_from:.3f}s", file=sys.stderr)
-            return time.time()
-
-        # The two cache-materialize jobs are independent (both read the
-        # with_ids cache; its partitions are cheap to load, so concurrent
-        # first-use lock contention is negligible — unlike the expensive
-        # tokenize cache, which each job builds exclusively for itself).
-        t = time.time()
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-        with _TPE(max_workers=2) as _ex:
-            f_stats = _ex.submit(
-                lambda: gd.groupBy("_seg").agg(*self._stat_exprs()).collect())
-            f_cnt = _ex.submit(gpdt.count)
-            stat_rows = f_stats.result()
-            f_cnt.result()
-        t = _tlog("stats+pdt-cache", t)
-        stats_by_seg = {int(r["_seg"]): r for r in stat_rows}
-
-        # ONE write job per OUTPUT TYPE across all pending segments,
-        # partitioned by _seg and renamed into the per-segment layout —
-        # 4 jobs total instead of 4 x len(pending) concurrent small jobs
-        # (which thrashed the scheduler and let AQE coalesce tiny per-
-        # segment shuffles into 1-task Python encodes).  File contents per
-        # segment are identical: the encode group key gains _seg, and
-        # segment doc ranges are disjoint.
-        tmp = self._p("segments", "_batch_tmp")
-        fsio.delete(self.spark, tmp)
-        pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
-
-        def _w_postings():
+            # one write job per OUTPUT TABLE across all segments; file
+            # contents per segment are identical to per-segment writes: the
+            # encode group key gains _seg, and segment doc ranges are
+            # disjoint
             enc = _encode_blocks_fn(cfg.block_size, with_scores=False,
                                     with_seg=True)
-            schema = T.StructType(
+            post_schema = T.StructType(
                 [T.StructField("_seg", T.LongType())] + _POSTINGS_SCHEMA.fields)
-            (self._key_repartition(
-                gpdt.select("_seg", "field", "term", "shard", "doc_id", "tf",
-                            F.col("norm_id").cast("long").alias("norm_id")),
-                "_seg", "field", "term", "shard")
-             .sortWithinPartitions("_seg", "field", "term", "shard", "doc_id")
-             .mapInPandas(enc, schema)
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "postings")))
-
-        def _w_termstats():
-            (gpdt.groupBy("_seg", "field", "term")
-             .agg(F.count(F.lit(1)).cast("long").alias("df"),
-                  F.sum("tf").cast("long").alias("total_tf"))
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "termstats")))
-
-        def _w_docs():
             # size the docs files to the data (guide §6): 32 tasks each
             # writing a sliver per segment made 128 tiny files for a 20k-doc
             # build and cost more in task scheduling than the write itself
             total_docs = sum(int(r["_n"]) for r in stat_rows)
-            n_out = min(dp, max(min(dp, 4), math.ceil(total_docs / 100_000)))
-            (gd.coalesce(n_out).write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "docs")))
+            n_docs_out = min(dp, max(min(dp, 4), math.ceil(total_docs / 100_000)))
+            tables = {
+                # block-encoded postings (skew-proof: keyed by
+                # (_seg, field, term, shard))
+                "postings": (
+                    self._key_repartition(
+                        gpdt.select("_seg", "field", "term", "shard", "doc_id",
+                                    "tf", F.col("norm_id").cast("long")
+                                    .alias("norm_id")),
+                        "_seg", "field", "term", "shard")
+                    .sortWithinPartitions("_seg", "field", "term", "shard",
+                                          "doc_id")
+                    .mapInPandas(enc, post_schema)),
+                # per-segment term stats (for global df at merge)
+                "termstats": (
+                    gpdt.groupBy("_seg", "field", "term")
+                    .agg(F.count(F.lit(1)).cast("long").alias("df"),
+                         F.sum("tf").cast("long").alias("total_tf"))),
+                "docs": gd.coalesce(n_docs_out),
+            }
+            pos_fields = [fc.name for fc in cfg.fields if fc.has_positions]
+            if pos_fields:
+                # delta-varint positions of position-indexed fields (json
+                # fields included: per-dot-path positions)
+                tables["positions"] = (
+                    self._key_repartition(
+                        gpdt.filter(F.col("field").isin(pos_fields))
+                        .select("_seg", "field", "term", "doc_id", "norm_id",
+                                "pos_bin"),
+                        "_seg", "field", "term")
+                    .sortWithinPartitions("_seg", "field", "term", "doc_id"))
 
-        def _w_positions():
-            (self._key_repartition(
-                gpdt.filter(F.col("field").isin(pos_fields))
-                .select("_seg", "field", "term", "doc_id", "norm_id",
-                        "pos_bin"),
-                "_seg", "field", "term")
-             .sortWithinPartitions("_seg", "field", "term", "doc_id")
-             .write.mode("overwrite").partitionBy("_seg")
-             .parquet(fsio.join(tmp, "positions")))
+            def _write(sub):
+                (tables[sub].write.mode("overwrite").partitionBy("_seg")
+                 .parquet(fsio.join(tmp, sub)))
 
-        from concurrent.futures import ThreadPoolExecutor
-        jobs = [_w_postings, _w_termstats, _w_docs]
-        subs = ["postings", "termstats", "docs"]
-        if pos_fields:
-            jobs.append(_w_positions)
-            subs.append("positions")
+            fsio.delete(self.spark, tmp)
+            with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+                for f in [ex.submit(_write, sub) for sub in tables]:
+                    f.result()
 
-        def _timed_job(j, name):
-            tj = time.time()
-            j()
-            _tlog(f"write-{name}", tj)
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            for f in [ex.submit(_timed_job, j, n) for j, n in zip(jobs, subs)]:
-                f.result()
-        t = _tlog("write-all", t)
-
-        # rename tmp/<sub>/_seg=<sid> -> segments/seg=NNNNN/<sub>
-        for sid in pending:
-            seg_dir = self._p("segments", f"seg={sid:05d}")
-            fsio.makedirs(self.spark, seg_dir)
-            for sub in subs:
-                src_dir = fsio.join(tmp, sub, f"_seg={sid}")
-                dst_dir = fsio.join(seg_dir, sub)
-                fsio.delete(self.spark, dst_dir)
-                if fsio.exists(self.spark, src_dir):
-                    fsio.rename(self.spark, src_dir, dst_dir)
-                else:  # empty segment: keep an empty dir like the old path
-                    fsio.makedirs(self.spark, dst_dir)
-            action = self._action_from_stats(sid, stats_by_seg.get(sid), t0)
-            with lock:
-                self._append_manifest(action)
-        fsio.delete(self.spark, tmp)
-        gpdt.unpersist()
-        gd.unpersist()
+            # rename tmp/<sub>/_seg=<sid> -> segments/seg=NNNNN/<sub>
+            actions = []
+            for sid in seg_ids:
+                seg_dir = self._p("segments", f"seg={sid:05d}")
+                fsio.makedirs(self.spark, seg_dir)
+                for sub, frame in tables.items():
+                    src_dir = fsio.join(tmp, sub, f"_seg={sid}")
+                    dst_dir = fsio.join(seg_dir, sub)
+                    fsio.delete(self.spark, dst_dir)
+                    if fsio.exists(self.spark, src_dir):
+                        fsio.rename(self.spark, src_dir, dst_dir)
+                    else:  # no rows: empty table with the table's schema
+                        (self.spark.createDataFrame(
+                            [], frame.drop("_seg").schema)
+                         .write.parquet(dst_dir))
+                actions.append(
+                    self._action_from_stats(sid, stats_by_seg.get(sid), t0))
+            return actions
+        finally:
+            fsio.delete(self.spark, tmp)
+            gpdt.unpersist()
+            gd.unpersist()
 
     # -- merge / finalize ---------------------------------------------------
     def _segment_ok(self, seg_dir: str) -> bool:
         """Cheap validity probe (footer read) — no Spark job per segment.
+        A postings dir without a Parquet file is invalid: every written
+        segment has one, even when it holds no rows.
 
         Non-posix roots: Spark's own footer read (driver-side schema
         resolution) replaces the pyarrow probe."""
@@ -1026,7 +926,7 @@ class IndexBuilder:
             files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
             for f in files:
                 pq.ParquetFile(os.path.join(pdir, f)).schema_arrow
-            return True
+            return bool(files)
         except Exception:
             return False
 
@@ -1260,20 +1160,13 @@ class IndexBuilder:
     def build(self, df: DataFrame, order_cols: Optional[List[str]] = None,
               doc_id_col: Optional[str] = None,
               fail_after_segments: Optional[int] = None) -> BuildStats:
-        """Full build with resume: segments already in the manifest are skipped."""
+        """Full build with resume: segments already in the manifest are
+        skipped.  ``fail_after_segments=N`` is the kill-test hook: the build
+        raises right after the Nth "add" of this call lands, so the crash
+        hits the same writer a plain build runs."""
         t0 = time.time()
-        dbg = os.environ.get("SPARK_GRAFT_BUILD_DEBUG") == "1"
-
-        def _tlog(label, t_from):
-            if dbg:
-                import sys
-                print(f"[build-pre] {label}: {time.time() - t_from:.3f}s",
-                      file=sys.stderr)
-            return time.time()
-
         fsio.makedirs(self.spark, self.index_dir)
         acts = self._manifest_actions()
-        _t = _tlog("manifest-read", t0)
         if any(a.get("action") == "compact" for a in acts):
             # after apply_deletes the active set is the compacted segment
             # only; a resume here would treat 0..n-1 as pending, rebuild
@@ -1310,73 +1203,56 @@ class IndexBuilder:
                     "assignment would not match the committed segments; "
                     "build into a fresh index directory instead")
 
-        _t = _tlog("manifest-init", _t)
         total = None
-        if doc_id_col is None and order_cols is None:
-            # the zipWithIndex path scans the input twice; cache it first.
-            # Row total falls out of the per-partition counts — no extra
-            # max(doc_id) pass.
-            df = df.persist()
-            with_ids, total = _zip_index_ids(df)
-        else:
-            with_ids = assign_doc_ids(df, order_cols=order_cols,
-                                      doc_id_col=doc_id_col)
-        # a narrow input (e.g. one modest parquet file -> 1-2 scan splits)
-        # would run the tokenize pass on a fraction of the cluster; widen to
-        # cluster width AFTER doc_id assignment (ids are position/column
-        # derived, so the round-robin shuffle cannot change them).  No-op at
-        # scale, where scan splits >= parallelism (guide §2.5 input skew).
-        _t = _tlog("assign-ids", _t)
-        dp = self.spark.sparkContext.defaultParallelism
-        if with_ids.rdd.getNumPartitions() < dp:
-            with_ids = with_ids.repartition(dp)
-        with_ids = with_ids.persist()
-        nseg = max(1, self.num_segments)
-        if nseg > 1:
-            # doc-range segments: deterministic, independently committable
-            if total is None:
-                m = with_ids.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-                total = int(m) + 1 if m is not None else 0
-            seg_width = max(1, math.ceil(total / nseg))
-        else:
-            seg_width = None
-        _t = _tlog("seg-width", _t)
-
-        import threading
-
-        pending = [sid for sid in range(nseg) if sid not in done]
-        manifest_lock = threading.Lock()
-        completed = 0
-
-        def run_segment(sid: int) -> int:
-            seg_df = with_ids
-            if seg_width is not None:
-                seg_df = with_ids.filter(
-                    (F.col("doc_id") >= sid * seg_width)
-                    & (F.col("doc_id") < (sid + 1) * seg_width))
-            action = self._build_segment(seg_df, sid)
-            with manifest_lock:
+        with_ids = None
+        try:
+            if doc_id_col is None and order_cols is None:
+                # the zipWithIndex path scans the input twice; cache it
+                # first.  Row total falls out of the per-partition counts —
+                # no extra max(doc_id) pass.
+                df = df.persist()
+                with_ids, total = _zip_index_ids(df)
+            else:
+                with_ids = assign_doc_ids(df, order_cols=order_cols,
+                                          doc_id_col=doc_id_col)
+            # a narrow input (e.g. one modest parquet file -> 1-2 scan
+            # splits) would run the tokenize pass on a fraction of the
+            # cluster; widen to cluster width AFTER doc_id assignment (ids
+            # are position/column derived, so the round-robin shuffle cannot
+            # change them).  No-op at scale, where scan splits >=
+            # parallelism (guide §2.5 input skew).
+            dp = self.spark.sparkContext.defaultParallelism
+            if with_ids.rdd.getNumPartitions() < dp:
+                with_ids = with_ids.repartition(dp)
+            with_ids = with_ids.persist()
+            nseg = max(1, self.num_segments)
+            if nseg > 1:
+                # doc-range segments: deterministic, independently committable
+                if total is None:
+                    m = with_ids.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
+                    total = int(m) + 1 if m is not None else 0
+                seg_col = F.expr(f"doc_id div {max(1, math.ceil(total / nseg))}")
+            else:
+                seg_col = F.lit(0).cast("long")
+            pending = [sid for sid in range(nseg) if sid not in done]
+            src = with_ids
+            if len(pending) < nseg:
+                src = with_ids.filter(seg_col.isin(pending))
+            actions = (self._build_segments_batched(src, pending, seg_col)
+                       if pending else [])
+            for n, action in enumerate(actions, 1):
                 self._append_manifest(action)
-            return sid
-
-        if fail_after_segments is not None:
-            # kill-test mode: sequential, deterministic failure point
-            for sid in pending:
-                run_segment(sid)
-                completed += 1
-                if completed >= fail_after_segments:
-                    with_ids.unpersist()
+                if fail_after_segments is not None and n >= fail_after_segments:
                     raise RuntimeError(
-                        f"injected failure after {completed} segments (kill test)")
-        elif pending:
-            self._build_segments_batched(with_ids, pending, nseg, seg_width,
-                                         manifest_lock)
+                        f"injected failure after {n} segments (kill test)")
 
-        t_merge = time.time()
-        merge_action = self._merge(list(range(nseg)))
-        self._append_manifest(merge_action)
-        with_ids.unpersist()
-        df.unpersist()
+            t_merge = time.time()
+            merge_action = self._merge(list(range(nseg)))
+            self._append_manifest(merge_action)
+        finally:
+            if with_ids is not None:
+                with_ids.unpersist()
+            df.unpersist()
         now = time.time()
         wall = now - t0
         n = merge_action["num_docs"]

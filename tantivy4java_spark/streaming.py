@@ -44,32 +44,33 @@ def append_segment(builder: IndexBuilder, batch_df: DataFrame,
     doc_id would make the column ambiguous in every downstream select."""
     if "doc_id" in batch_df.columns:
         # deterministic ids: no persist needed (re-evaluation is stable)
-        return builder._build_segment(
-            batch_df.withColumn("doc_id", F.col("doc_id").cast("long")),
-            seg_id)
-    base = seg_id << SEG_SHIFT
-    schema = T.StructType(batch_df.schema.fields
-                          + [T.StructField("doc_id", T.LongType())])
+        with_ids = batch_df.withColumn("doc_id", F.col("doc_id").cast("long"))
+    else:
+        base = seg_id << SEG_SHIFT
+        schema = T.StructType(batch_df.schema.fields
+                              + [T.StructField("doc_id", T.LongType())])
 
-    def add_ids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["doc_id"] = (base + (pid << 24)
-                             + np.arange(seen, seen + len(pdf), dtype=np.int64))
-            seen += len(pdf)
-            yield pdf
+        def add_ids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from pyspark import TaskContext
+            pid = TaskContext.get().partitionId()
+            seen = 0
+            for pdf in it:
+                pdf = pdf.copy()
+                pdf["doc_id"] = (base + (pid << 24)
+                                 + np.arange(seen, seen + len(pdf),
+                                             dtype=np.int64))
+                seen += len(pdf)
+                yield pdf
 
-    # MUST pin one evaluation: doc_id depends on the physical partition
-    # layout (TaskContext.partitionId), and _build_segment evaluates this
-    # frame for several jobs (docs table, postings, positions, stats).  An
-    # unpersisted frame can re-evaluate under a different layout, silently
-    # giving the SAME row DIFFERENT ids across tables.
-    with_ids = batch_df.mapInPandas(add_ids, schema).persist()
+        # MUST pin one evaluation: doc_id depends on the physical partition
+        # layout (TaskContext.partitionId), and the segment writer builds
+        # its docs and per-doc-term caches from this frame in separate jobs.
+        # An unpersisted frame can re-evaluate under a different layout,
+        # silently giving the SAME row DIFFERENT ids across tables.
+        with_ids = batch_df.mapInPandas(add_ids, schema).persist()
     try:
-        return builder._build_segment(with_ids, seg_id)
+        return builder._build_segments_batched(
+            with_ids, [seg_id], F.lit(seg_id).cast("long"))[0]
     finally:
         with_ids.unpersist()
 

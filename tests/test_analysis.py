@@ -88,3 +88,88 @@ def test_sql_path_matches_python_path(spark):
         expected = [{"term": t, "pos": p} for t, p in tokenize_text(text or "")]
         actual = [{"term": s["term"], "pos": s["pos"]} for s in row["toks"]]
         assert actual == expected, f"mismatch for {text!r}"
+
+
+# -- kernels whose pandas reference was deleted: pinned to the golden path --
+
+_TIGHT_TEXTS = [
+    "İstanbul İİ İ ß straße STRASSE ẞ", "ǅemal Ωmega мир 世界 ＡＢＣ x_y",
+    "a bb ccc dddd eeeee", "naïve café CAFÉ Œuvre", None, "",
+]
+
+
+@pytest.mark.parametrize("tokenizer", ["default", "whitespace"])
+def test_token_len_expr_matches_sql_tokenizer(spark, tokenizer):
+    """The docs-table length column counts exactly the tokens
+    sql_tokenize_expr keeps, also where lowercasing changes the UTF-8 length
+    (İ -> i + U+0307, 2 -> 3 bytes) and the limit cuts multi-byte tokens."""
+    from pyspark.sql import functions as F
+    from tantivy4java_spark.build import IndexBuilder
+    from tantivy4java_spark.schema import FieldConfig, IndexConfig
+    df = spark.createDataFrame([(t,) for t in _TIGHT_TEXTS], "text string")
+    for limit in (1, 2, 3, 4, 6):
+        fc = FieldConfig("text", "text", tokenizer=tokenizer, token_limit=limit)
+        b = IndexBuilder(spark, IndexConfig(fields=[fc]), "unused")
+        got = df.select(
+            b._token_len_expr(fc, df).alias("n"),
+            F.size(sql_tokenize_expr(F.col("text"), tokenizer, limit))
+            .alias("want")).collect()
+        assert [r["n"] for r in got] == [r["want"] for r in got], limit
+
+
+def _kernel_rows(texts, limit=DEFAULT_TOKEN_LIMIT):
+    """(doc, term) -> (tf, norm_id, positions) from the mapInArrow kernel."""
+    import pyarrow as pa
+    from tantivy4java_spark.build import _tokenize_agg_fn
+    from tantivy4java_spark.codec import decode_positions
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts)), pa.int64()), pa.array(texts, pa.string())],
+        names=["doc_id", "body"])
+    out = {}
+    for batch in _tokenize_agg_fn("body", "default", limit)(iter([rb])):
+        d = batch.to_pydict()
+        assert set(d["field"]) == {"body"}
+        for doc, term, tf, norm, pb in zip(d["doc_id"], d["term"], d["tf"],
+                                           d["norm_id"], d["pos_bin"]):
+            out[(doc, term)] = (tf, norm, decode_positions(pb).tolist())
+    return out
+
+
+def _golden_rows(texts, limit=DEFAULT_TOKEN_LIMIT):
+    from tantivy4java_spark.fieldnorm import fieldnorm_to_id
+    out = {}
+    for doc, text in enumerate(texts):
+        toks = tokenize_text(text, "default", limit)
+        norm = int(fieldnorm_to_id([len(toks)])[0])
+        per_term = {}
+        for t, p in toks:
+            per_term.setdefault(t, []).append(p)
+        for t, ps in per_term.items():
+            out[(doc, t)] = (len(ps), norm, ps)
+    return out
+
+
+@pytest.mark.parametrize("texts,ascii_kernel", [
+    (["Hello World hello", "İstanbul straße İİ", "naïve café CAFÉ",
+      None, "", "x" * 300 + " tail x", "snake_case 42 Snake"], False),
+    (["Hello, World! FOO_bar foo", "the quick THE", "abc123 456",
+      None, "", "y" * 256 + " tail", "a-b a_b A.B"], True),
+], ids=["mixed-non-ascii", "pure-ascii"])
+@pytest.mark.parametrize("limit", [DEFAULT_TOKEN_LIMIT, 4])
+def test_tokenize_kernel_matches_tokenize_text(monkeypatch, texts,
+                                               ascii_kernel, limit):
+    """Both kernels of the posting tokenizer give tokenize_text's
+    (doc, term, tf, positions); the per-batch ASCII gate routes a batch with
+    any non-ASCII row to the pandas regex kernel, a pure-ASCII batch to the
+    Arrow/RE2 kernel."""
+    import pyarrow.compute as pc
+    calls = []
+    real_split = pc.split_pattern_regex
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real_split(*a, **kw)
+
+    monkeypatch.setattr(pc, "split_pattern_regex", spy)
+    assert _kernel_rows(texts, limit) == _golden_rows(texts, limit)
+    assert bool(calls) == ascii_kernel

@@ -30,3 +30,21 @@ def test_vectorized_matches_scalar():
     ids = fieldnorm_to_id(ns)
     assert (id_to_fieldnorm(ids) <= ns).all()
     assert (ids >= 0).all() and (ids <= 255).all()
+
+
+def test_norm_id_expr_matches_fieldnorm_to_id(spark):
+    """The JVM fieldnorm expression of the docs table equals fieldnorm_to_id
+    on 0..300, on every table entry and its neighbours, on 2^40, and maps a
+    null length to id 0."""
+    from pyspark.sql import functions as F
+    from tantivy4java_spark.build import _norm_id_expr
+    vals = set(range(301)) | {2 ** 40}
+    for v in FIELDNORM_TABLE:
+        vals |= {int(v) - 1, int(v), int(v) + 1}
+    vals = sorted(v for v in vals if v >= 0)  # token counts are never < 0
+    df = spark.createDataFrame([(v,) for v in vals] + [(None,)], "n long")
+    got = {r["n"]: r["id"] for r in
+           df.select("n", _norm_id_expr(F.col("n")).alias("id")).collect()}
+    want = dict(zip(vals, fieldnorm_to_id(vals).tolist()))
+    want[None] = 0
+    assert got == want
